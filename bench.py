@@ -2,9 +2,9 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
 ONE compact JSON line as the final stdout line:
 {"metric": ..., "value": total_sec, "unit": "sec", "sf": ...,
-"n_queries": N, "queries": {...ALL per-query seconds...}}.
-Since r17 the line carries every query's timing (compact separators,
-~6 KB) so the round driver can compute a real per-query geomean;
+"n_queries": N, "queries": {...per-query seconds...}}.
+Since r17 the line carries every successful query's timing (compact
+separators, ~6 KB) so a consumer can compute a real per-query geomean;
 BENCH_DETAILS.json next to this file additionally records per-rep
 samples.
 
@@ -291,7 +291,9 @@ def main() -> None:
         "n_failed": len(failed),
         "sec_per_query": details["sec_per_query"],
         "calib": details["calib"],
-        "queries": timings,
+        # Failed queries are counted in n_failed and left out here, so
+        # no -1 sentinel reaches a consumer averaging these seconds.
+        "queries": {n: v for n, v in timings.items() if v >= 0},
     }
     print(json.dumps(result, separators=(",", ":")))
 

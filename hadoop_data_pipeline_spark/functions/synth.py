@@ -63,7 +63,10 @@ def clustered_embeddings_df(
 ):
     """The fixture as a DataFrame with the test corpus's embeddings
     schema."""
-    return spark.createDataFrame(
+    from hadoop_data_pipeline_spark.session import local_frame
+
+    return local_frame(
+        spark,
         clustered_embedding_rows(
             n=n, dim=dim, n_clusters=n_clusters, sigma=sigma, seed=seed
         ),
@@ -177,7 +180,10 @@ def synthetic_documents_df(
 ):
     """The native-dedup corpus as a DataFrame with the test corpus's
     documents schema."""
-    return spark.createDataFrame(
+    from hadoop_data_pipeline_spark.session import local_frame
+
+    return local_frame(
+        spark,
         synthetic_document_rows(
             n=n,
             exact_dup_rate=exact_dup_rate,

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hadoop_data_pipeline_spark.functions import dual
+from hadoop_data_pipeline_spark.session import local_frame
 
 #: Jaccard from a staged intersection size and the two set sizes:
 #: |A ∪ B| = |A| + |B| - |A ∩ B| (the arrays are distinct sets), so
@@ -457,10 +458,10 @@ def connected_components(
         # pipeline — one job instead of two.
         probe = half.limit(driver_edge_limit + 1).collect()
         if len(probe) <= driver_edge_limit:
-            mapping = _driver_union_find(probe)
-            spark = nodes.sparkSession
-            map_df = spark.createDataFrame(
-                mapping, f"__n {id_type}, __l {id_type}"
+            map_df = local_frame(
+                nodes.sparkSession,
+                _driver_union_find(probe),
+                f"__n {id_type}, __l {id_type}",
             )
             return nodes.join(
                 F.broadcast(map_df), nodes[id_col] == map_df.__n, "left"

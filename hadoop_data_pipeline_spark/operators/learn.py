@@ -59,6 +59,7 @@ from itertools import chain
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from hadoop_data_pipeline_spark.functions import dual
+from hadoop_data_pipeline_spark.session import local_frame
 
 #: Hashed bag-of-words dimensionality. Small on purpose: the fixture
 #: vocabulary is ~40 words and the oracle unrolls joins per epoch;
@@ -225,7 +226,7 @@ def perceptron_weights(
     xf.unpersist()
     spark = SparkSession.getActiveSession() or df.sparkSession
     rows = sorted(w.items()) + [(-1, b)]
-    return spark.createDataFrame(rows, "f int, w bigint")
+    return local_frame(spark, rows, "f int, w bigint")
 
 
 def perceptron_doc_scores(

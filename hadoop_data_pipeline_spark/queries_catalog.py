@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from hadoop_data_pipeline_spark.operators import queries as Q
 from hadoop_data_pipeline_spark.operators import reshape
+from hadoop_data_pipeline_spark.session import local_frame
 from hadoop_data_pipeline_spark.sources.readers import load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -5606,6 +5607,18 @@ def pagerank_part_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "count(distinct l_partkey) + count(distinct l_suppkey) AS n"
         ).collect()[0]["n"]
     )
+    if n_nodes == 0:
+        # No edges, no ranks. Inlining n = 0 would make the teleport
+        # term a constant division by zero, which Catalyst folds into
+        # a DIVIDE_BY_ZERO error under ANSI.
+        ed0.unpersist()
+        return Q._with_cached_deps(
+            local_frame(
+                spark,
+                [],
+                "node_id bigint, node_type string, rank_scaled bigint",
+            )
+        )
     # Per-call unique view names: two concurrent calls in one
     # SparkSession (e.g. different sf_dir) must not bind one call's
     # unrolled plan to the other's frames via a shared session-global

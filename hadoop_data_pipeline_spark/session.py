@@ -16,10 +16,41 @@ memory/instance settings differ (supplied via spark-submit).
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[Sequence], ddl: str
+) -> DataFrame:
+    """A driver-side list of row tuples as a DataFrame typed by ``ddl``.
+
+    The one way the engine turns Python rows into a frame. A list
+    handed to ``spark.createDataFrame`` goes through the RDD path
+    (``parallelize`` plus a re-serializing Python ``map``), so every
+    job that reads it forks and feeds Python workers, even for zero
+    rows. An Arrow table plans as a ``LocalRelation`` instead: no
+    Python worker runs, and a zero-row frame is an empty relation that
+    Catalyst's ``PropagateEmptyRelation`` prunes joins against. Arrow
+    input never falls back to the RDD path, whatever
+    ``spark.sql.execution.arrow.pyspark.fallback.enabled`` says.
+    ``pyarrow`` is imported here, not at module load, so session
+    start-up does not pay for it."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = T._parse_datatype_string(ddl)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def get_session(

@@ -27,12 +27,14 @@ O(batch + matching digests), independent of corpus size.
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from hadoop_data_pipeline_spark.session import local_frame
 from hadoop_data_pipeline_spark.streaming.commitlog import BatchCommitLog
 
 
@@ -58,6 +60,23 @@ def field_ddl(schema: T.StructType | str, name: str) -> str:
         else schema
     )
     return st[name].dataType.simpleString()
+
+
+def empty_state(
+    spark: SparkSession,
+    schema: T.StructType | str,
+    source_cols: Sequence[str],
+    ddl: str,
+) -> DataFrame:
+    """The zero-row frame a sink reads for a state store that holds no
+    parquet yet: ``source_cols`` typed from the sink's source schema
+    (:func:`field_ddl`), then the store's own columns as ``ddl``. It
+    is an empty ``LocalRelation`` (:func:`~hadoop_data_pipeline_spark.
+    session.local_frame`), so a first tick's probe and verify branches
+    against it are pruned at planning time and start no Python
+    worker."""
+    typed = ", ".join(f"{c} {field_ddl(schema, c)}" for c in source_cols)
+    return local_frame(spark, [], f"{typed}, {ddl}")
 
 
 def first_per_digest(

@@ -52,6 +52,11 @@ from hadoop_data_pipeline_spark.functions import dual
 from hadoop_data_pipeline_spark.operators import dedup
 from hadoop_data_pipeline_spark.operators import similarity as sim
 from hadoop_data_pipeline_spark.streaming.commitlog import BatchCommitLog
+from hadoop_data_pipeline_spark.streaming.dedup_sink import (
+    empty_state,
+    has_parquet,
+    stage_and_release,
+)
 
 
 class StreamingEmbeddingSink:
@@ -123,27 +128,18 @@ class StreamingEmbeddingSink:
 
     # -- persisted state --------------------------------------------------
 
-    def _id_ddl(self) -> str:
-        from hadoop_data_pipeline_spark.streaming.dedup_sink import field_ddl
-
-        return field_ddl(self.schema, self.id_col)
-
     def store(self) -> DataFrame:
-        """The admitted vector store (empty-safe, typed)."""
-        from hadoop_data_pipeline_spark.streaming.dedup_sink import has_parquet
-
-        from hadoop_data_pipeline_spark.streaming.dedup_sink import field_ddl
-
+        """The admitted vector store. Before the first commit it is an
+        empty ``LocalRelation`` with the id and vector columns typed
+        from the source schema (:func:`empty_state`)."""
         if has_parquet(self.store_dir):
             return self.spark.read.parquet(self.store_dir)
-        base = (
-            f"{self.id_col} {self._id_ddl()}, "
-            f"{self.vec_col} {field_ddl(self.schema, self.vec_col)}, "
-            f"norm double, bucket int"
-        )
+        ddl = "norm double, bucket int"
         if self.centroids is not None:
-            base += ", cell int"
-        return self.spark.createDataFrame([], base)
+            ddl += ", cell int"
+        return empty_state(
+            self.spark, self.schema, [self.id_col, self.vec_col], ddl
+        )
 
     # -- admission --------------------------------------------------------
 
@@ -186,10 +182,6 @@ class StreamingEmbeddingSink:
     # -- streaming --------------------------------------------------------
 
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        from hadoop_data_pipeline_spark.streaming.dedup_sink import (
-            stage_and_release,
-        )
-
         if self.commit_log.is_committed(batch_id):
             return  # replay of a marker-committed batch: no-op
         enriched = self.enrich(batch_df)

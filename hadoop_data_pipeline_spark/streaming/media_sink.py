@@ -51,7 +51,7 @@ from pyspark.sql import types as T
 from hadoop_data_pipeline_spark.operators import multimodal as mm
 from hadoop_data_pipeline_spark.streaming.commitlog import BatchCommitLog
 from hadoop_data_pipeline_spark.streaming.dedup_sink import (
-    field_ddl,
+    empty_state,
     has_parquet,
     stage_and_release,
 )
@@ -101,11 +101,11 @@ class StreamingMediaSink:
                 id_col=self.id_col,
                 frame_col="frame_idx",
             )
-        id_ddl = field_ddl(self.schema, self.id_col)
-        return self.spark.createDataFrame(
-            [],
-            f"{self.id_col} {id_ddl}, frame_idx int, dhash bigint, "
-            "band_id int, band_key bigint",
+        return empty_state(
+            self.spark,
+            self.schema,
+            [self.id_col],
+            "frame_idx int, dhash bigint, band_id int, band_key bigint",
         )
 
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:

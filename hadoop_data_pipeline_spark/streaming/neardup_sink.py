@@ -37,6 +37,12 @@ from pyspark.sql import types as T
 
 from hadoop_data_pipeline_spark.operators import dedup
 from hadoop_data_pipeline_spark.streaming.commitlog import BatchCommitLog
+from hadoop_data_pipeline_spark.streaming.dedup_sink import (
+    empty_state,
+    field_ddl,
+    has_parquet,
+    stage_and_release,
+)
 
 
 class StreamingNearDupSink:
@@ -80,32 +86,25 @@ class StreamingNearDupSink:
             run_id_file=f"{self.checkpoint}/metadata",
         )
 
-    def _id_ddl(self) -> str:
-        from hadoop_data_pipeline_spark.streaming.dedup_sink import field_ddl
-
-        return field_ddl(self.schema, self.id_col)
-
     def _clean_docs(self) -> DataFrame:
-        from hadoop_data_pipeline_spark.streaming.dedup_sink import has_parquet
-
         if has_parquet(self.clean_dir):
             return self.spark.read.parquet(self.clean_dir).select(
                 self.id_col, self.text_col
             )
-        return self.spark.createDataFrame(
-            [], f"{self.id_col} {self._id_ddl()}, {self.text_col} string"
+        return empty_state(
+            self.spark, self.schema, [self.id_col], f"{self.text_col} string"
         )
 
     def _band_index(self) -> DataFrame:
-        from hadoop_data_pipeline_spark.streaming.dedup_sink import has_parquet
-
         if has_parquet(self.index_dir):
             return dedup.read_band_index(
                 self.spark, self.index_dir, self.id_col
             )
-        return self.spark.createDataFrame(
-            [],
-            f"{self.id_col} {self._id_ddl()}, band_id int, band_key string",
+        return empty_state(
+            self.spark,
+            self.schema,
+            [self.id_col],
+            "band_id int, band_key string",
         )
 
     def _ensure_index_table(self) -> bool:
@@ -119,16 +118,14 @@ class StreamingNearDupSink:
         Spark recovers bucket ids from the file names, so the
         exchange-free probe layout is intact across restarts (pinned by
         the restart test)."""
-        from hadoop_data_pipeline_spark.streaming.dedup_sink import has_parquet
-
         if self.spark.catalog.tableExists(self.index_table):
             return True
         if not has_parquet(self.index_dir):
             return False
         self.spark.sql(
             f"CREATE TABLE {self.index_table} "
-            f"({self.id_col} {self._id_ddl()}, band_id INT, "
-            f"band_key STRING) USING parquet "
+            f"({self.id_col} {field_ddl(self.schema, self.id_col)}, "
+            f"band_id INT, band_key STRING) USING parquet "
             f"CLUSTERED BY (band_key) SORTED BY (band_key) "
             f"INTO {self.n_buckets} BUCKETS "
             f"LOCATION '{self.index_dir}'"
@@ -136,10 +133,6 @@ class StreamingNearDupSink:
         return True
 
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        from hadoop_data_pipeline_spark.streaming.dedup_sink import (
-            stage_and_release,
-        )
-
         if self.commit_log.is_committed(batch_id):
             # replay of a batch whose marker landed before the engine's
             # checkpoint commit — already fully in the stores.

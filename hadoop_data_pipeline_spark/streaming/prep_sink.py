@@ -46,7 +46,7 @@ from hadoop_data_pipeline_spark.operators import dedup
 from hadoop_data_pipeline_spark.operators import text as tx
 from hadoop_data_pipeline_spark.streaming.commitlog import BatchCommitLog
 from hadoop_data_pipeline_spark.streaming.dedup_sink import (
-    field_ddl,
+    empty_state,
     first_per_digest,
     has_parquet,
     stage_and_release,
@@ -95,19 +95,16 @@ class StreamingPrepSink:
             run_id_file=f"{self.checkpoint}/metadata",
         )
 
-    # -- persisted-state readers (empty-safe, typed from the source
-    # schema so non-bigint doc ids work from the first batch) --------
-
-    def _id_ddl(self) -> str:
-        return field_ddl(self.schema, self.id_col)
+    # -- persisted-state readers (an empty store reads as an empty
+    # LocalRelation typed from the source schema: see empty_state) ---
 
     def _clean_docs(self) -> DataFrame:
         if has_parquet(self.clean_dir):
             return self.spark.read.parquet(self.clean_dir).select(
                 self.id_col, self.text_col
             )
-        return self.spark.createDataFrame(
-            [], f"{self.id_col} {self._id_ddl()}, {self.text_col} string"
+        return empty_state(
+            self.spark, self.schema, [self.id_col], f"{self.text_col} string"
         )
 
     def _digests(self) -> DataFrame | None:
@@ -120,9 +117,11 @@ class StreamingPrepSink:
             return dedup.read_band_index(
                 self.spark, self.index_dir, self.id_col
             )
-        return self.spark.createDataFrame(
-            [],
-            f"{self.id_col} {self._id_ddl()}, band_id int, band_key string",
+        return empty_state(
+            self.spark,
+            self.schema,
+            [self.id_col],
+            "band_id int, band_key string",
         )
 
     # -- the pipeline ---------------------------------------------------

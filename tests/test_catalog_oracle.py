@@ -63,6 +63,30 @@ def test_driver_window_invariants():
     assert not missing, f"window entries without exact oracles: {missing}"
 
 
+def test_pagerank_zero_row_edges(spark, tmp_path):
+    """An empty lineitem has no graph: pagerank_part_supplier returns
+    its empty typed result instead of dividing by a zero node count,
+    which is an error under ANSI (Spark 4's default)."""
+    from hadoop_data_pipeline_spark.operators.queries import unpersist_deps
+    from hadoop_data_pipeline_spark.queries_catalog import (
+        pagerank_part_supplier,
+    )
+    from hadoop_data_pipeline_spark.sources.readers import load_table
+
+    load_table(spark, SF_SMALL, "lineitem").limit(0).write.parquet(
+        str(tmp_path / "lineitem.parquet")
+    )
+    out = pagerank_part_supplier(spark, str(tmp_path))
+    assert out.collect() == []
+    unpersist_deps(out)
+    assert out.schema.simpleString() == (
+        "struct<node_id:bigint,node_type:string,rank_scaled:bigint>"
+    )
+    full = pagerank_part_supplier(spark, SF_SMALL)
+    assert full.schema.simpleString() == out.schema.simpleString()
+    unpersist_deps(full)
+
+
 @pytest.mark.parametrize("name", list(entrymod.queries()))
 def test_query_matches_oracle(spark, duck, name):
     fn = entrymod.queries()[name]

@@ -124,6 +124,17 @@ def test_render_is_deterministic_and_content_addressed():
     assert set(np.unique(arrs)) == {0, 255}
 
 
+def test_cached_cells_row_is_read_only():
+    """Every render shares ``_cells_row``'s cached array, so a write
+    to it must raise instead of corrupting later renders."""
+    before = ic.render_histogram_image("key agg row scan")
+    row = ic._cells_row("key", 3, ic.RENDER_W * ic.RENDER_H)
+    with pytest.raises(ValueError):
+        row[0] = 0
+    assert ic._cells_row("key", 3, ic.RENDER_W * ic.RENDER_H) is row
+    assert ic.render_histogram_image("key agg row scan") == before
+
+
 def test_image_pixel_stats_exact_integers():
     rgb = np.full((2, 2, 3), 10, dtype=np.uint8)
     rgb[0, 0, 0] = 22

@@ -566,3 +566,23 @@ def test_scatter_scan_shape_gate(spark):
         Q.scatter_small_scan(scan).rdd.getNumPartitions()
         == spark.sparkContext.defaultParallelism
     )
+
+
+def test_scatter_skips_persisted_scan(spark):
+    """A persisted scan-shaped frame, or a projection over one, reads
+    as an ``InMemoryRelation`` once the cache is substituted: the
+    cache decides its partitioning, so scatter_small_scan leaves it
+    untouched."""
+    from hadoop_data_pipeline_spark.sources.readers import load_table
+    from tests.conftest import SF_SMALL
+
+    cached = load_table(spark, SF_SMALL, "region").persist()
+    try:
+        projected = cached.select("r_name")
+        for f in (cached, projected):
+            assert not Q._is_scan_shaped(f)
+            assert Q.scatter_small_scan(f) is f
+    finally:
+        cached.unpersist()
+    fresh = load_table(spark, SF_SMALL, "region")
+    assert Q._is_scan_shaped(fresh.select("r_name"))

@@ -197,11 +197,12 @@ class IncrementalPipeline:
             )
             self.versioner.cleanup_old_versions(year)
 
-        long_df = wide_to_long(
-            self.spark.read.parquet(f"{self.wide_path}/year={year}").withColumn(
-                "year", F.lit(year)
-            )
+        # The schema is the one just written, so the re-read submits no
+        # schema-inference job.
+        wide = self.spark.read.schema(df.drop("year").schema).parquet(
+            f"{self.wide_path}/year={year}"
         )
+        long_df = wide_to_long(wide.withColumn("year", F.lit(year)))
         atomic_write_partition(long_df, self.long_path, "year", year)
         long_rows = long_df.count()
         self._mark(files, ".done")

@@ -27,7 +27,14 @@ from hadoop_data_pipeline_spark.session import local_frame
 from hadoop_data_pipeline_spark.sources.readers import load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
+
+#: Each exact oracle as registered: a constant SQL string or a
+#: zero-argument builder. The builders run once, on the first read of
+#: ``ORACLES`` (see ``__getattr__``): the full set is ~7.2 MB of SQL and
+#: the lens-inlining entries import ~2.7 MB of generated lens-map
+#: source, which a process that only runs queries never needs.
+_ORACLE_SOURCES: dict[str, str | Callable[[], str]] = {}
+ORACLES: dict[str, str]  # bound by __getattr__ on first read
 
 #: Tolerance oracles for sketch-valued queries the exact value-hash
 #: gate cannot cover (HLL estimates are engine-specific): DuckDB SQL
@@ -60,14 +67,14 @@ def _parquet_row_count(path: str) -> int:
 
 def register(
     name: str,
-    oracle: str | None = None,
+    oracle: str | Callable[[], str] | None = None,
     bound_oracle: str | None = None,
     rel_tol: float = 0.05,
 ):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         QUERIES[name] = fn
         if oracle is not None:
-            ORACLES[name] = oracle
+            _ORACLE_SOURCES[name] = oracle
         if bound_oracle is not None:
             BOUND_ORACLES[name] = {"sql": bound_oracle, "rel_tol": rel_tol}
         return fn
@@ -858,7 +865,7 @@ def _duck_token_stats() -> str:
     )
 
 
-@register("text_token_stats", oracle=_duck_token_stats())
+@register("text_token_stats", oracle=_duck_token_stats)
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting (whitespace + BPE-ish regex proxy) — pure
     projection, zero shuffle, codegen'd."""
@@ -878,7 +885,7 @@ def _duck_lang_id() -> str:
     )
 
 
-@register("lang_id_heuristic", oracle=_duck_lang_id())
+@register("lang_id_heuristic", oracle=_duck_lang_id)
 def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Marker-word language ID (argmax with fixed tie-break)."""
     return tx.lang_id(load_table(spark, sf_dir, "documents"))
@@ -903,7 +910,7 @@ def _duck_lang_confusion() -> str:
     """
 
 
-@register("lang_id_confusion", oracle=_duck_lang_confusion())
+@register("lang_id_confusion", oracle=_duck_lang_confusion)
 def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classifier-evaluation confusion matrix for the heuristic lang-ID
     against the fixture's labeled ``lang`` column: per (label,
@@ -956,7 +963,7 @@ def _duck_fertility() -> str:
     """
 
 
-@register("tokenizer_fertility_by_lang", oracle=_duck_fertility())
+@register("tokenizer_fertility_by_lang", oracle=_duck_fertility)
 def tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer-fairness diagnostic: per language, the FERTILITY
     (subtokens emitted per whitespace word — the standard measure of
@@ -996,7 +1003,7 @@ def _duck_quality() -> str:
     )
 
 
-@register("text_quality_score", oracle=_duck_quality())
+@register("text_quality_score", oracle=_duck_quality)
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite document quality score (length / stopword / punct)."""
     return tx.quality_score(load_table(spark, sf_dir, "documents"))
@@ -1009,7 +1016,7 @@ def _duck_fingerprint() -> str:
     )
 
 
-@register("doc_fingerprint", oracle=_duck_fingerprint())
+@register("doc_fingerprint", oracle=_duck_fingerprint)
 def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-sensitive rolling-hash document fingerprint."""
     return tx.fingerprint(load_table(spark, sf_dir, "documents"))
@@ -1047,7 +1054,7 @@ def _duck_within_doc_dedup() -> str:
     """
 
 
-@register("within_doc_dedup", oracle=_duck_within_doc_dedup())
+@register("within_doc_dedup", oracle=_duck_within_doc_dedup)
 def within_doc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-document repetition removal (C4/Gopher-style): drop
     repeated tokens per document keeping first occurrences in order —
@@ -1070,7 +1077,7 @@ def _duck_minhash_sig() -> str:
     )
 
 
-@register("minhash_signatures_docs", oracle=_duck_minhash_sig())
+@register("minhash_signatures_docs", oracle=_duck_minhash_sig)
 def minhash_signatures_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document MinHash signature over distinct word bigrams."""
     return dd.minhash_signatures(load_table(spark, sf_dir, "documents"))
@@ -1115,7 +1122,7 @@ def _duck_near_dup_sql(threshold: float) -> str:
     """
 
 
-@register("near_dup_pairs_minhash", oracle=_duck_near_dup_sql(0.5))
+@register("near_dup_pairs_minhash", oracle=lambda: _duck_near_dup_sql(0.5))
 def near_dup_pairs_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup pairs (bigram Jaccard >= 0.5 after exact
     verification of LSH band candidates)."""
@@ -1160,7 +1167,8 @@ def _duck_ngram_jaccard_sql(threshold: float, max_doc_freq: int) -> str:
 
 
 @register(
-    "ngram_jaccard_pairs_lang", oracle=_duck_ngram_jaccard_sql(0.3, 100)
+    "ngram_jaccard_pairs_lang",
+    oracle=lambda: _duck_ngram_jaccard_sql(0.3, 100),
 )
 def ngram_jaccard_pairs_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked n-gram Jaccard (block = lang, threshold 0.3) with the
@@ -1180,7 +1188,7 @@ def _duck_simhash_sql() -> str:
     )
 
 
-@register("simhash_docs", oracle=_duck_simhash_sql())
+@register("simhash_docs", oracle=_duck_simhash_sql)
 def simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """28-bit SimHash signature per document."""
     return dd.simhash_signatures(load_table(spark, sf_dir, "documents"))
@@ -1202,7 +1210,7 @@ def _duck_cosine_topk_sql(k: int = 5, n_queries: int = 10) -> str:
     """
 
 
-@register("embedding_cosine_topk", oracle=_duck_cosine_topk_sql())
+@register("embedding_cosine_topk", oracle=_duck_cosine_topk_sql)
 def embedding_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force exact cosine top-5 neighbors for query vecs 0-9."""
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1228,7 +1236,7 @@ def _duck_ann_topk_sql(k: int = 5, n_queries: int = 10) -> str:
     """
 
 
-@register("embedding_ann_lsh_topk", oracle=_duck_ann_topk_sql())
+@register("embedding_ann_lsh_topk", oracle=_duck_ann_topk_sql)
 def embedding_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-5 via random-hyperplane LSH buckets (256)."""
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1281,7 +1289,7 @@ def _duck_multiprobe_topk_sql(
 
 
 @register(
-    "embedding_ann_multiprobe_topk", oracle=_duck_multiprobe_topk_sql()
+    "embedding_ann_multiprobe_topk", oracle=_duck_multiprobe_topk_sql
 )
 def embedding_ann_multiprobe_topk(
     spark: SparkSession, sf_dir: str
@@ -1345,7 +1353,7 @@ def _duck_filtered_topk_sql(
 
 @register(
     "embedding_ann_filtered_topk",
-    oracle=_duck_filtered_topk_sql("label % 3 = 1", n_probe=4),
+    oracle=lambda: _duck_filtered_topk_sql("label % 3 = 1", n_probe=4),
 )
 def embedding_ann_filtered_topk(
     spark: SparkSession, sf_dir: str
@@ -1372,12 +1380,8 @@ _MIX_BUDGET = 1_000_000
 
 
 def _duck_mixture_plan_sql() -> str:
-    # local import: this runs at decoration time, before the module's
-    # `operators import curation as cur` line below executes
-    from hadoop_data_pipeline_spark.operators.curation import sql_str_lit
-
     cases = " ".join(
-        f"WHEN {sql_str_lit(k)} THEN CAST({float(v)!r} AS DOUBLE)"
+        f"WHEN {cur.sql_str_lit(k)} THEN CAST({float(v)!r} AS DOUBLE)"
         for k, v in sorted(_MIX_WEIGHTS.items())
     )
     w = f"(CASE lang {cases} ELSE CAST(0.0 AS DOUBLE) END)"
@@ -1399,7 +1403,7 @@ def _duck_mixture_plan_sql() -> str:
     """
 
 
-@register("mixture_budget_plan_by_lang", oracle=_duck_mixture_plan_sql())
+@register("mixture_budget_plan_by_lang", oracle=_duck_mixture_plan_sql)
 def mixture_budget_plan_by_lang(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1446,7 +1450,7 @@ def _duck_hard_negatives(lo: float, hi: float, per_anchor: int) -> str:
 
 @register(
     "hard_negative_pairs_embeddings",
-    oracle=_duck_hard_negatives(0.15, 0.3, 3),
+    oracle=lambda: _duck_hard_negatives(0.15, 0.3, 3),
 )
 def hard_negative_pairs_embeddings(
     spark: SparkSession, sf_dir: str
@@ -1463,7 +1467,9 @@ def hard_negative_pairs_embeddings(
     return sim.hard_negative_pairs(emb, lo=0.15, hi=0.3, per_anchor=3)
 
 
-@register("embedding_near_dup_pairs", oracle=_duck_near_dup_emb_sql(0.3))
+@register(
+    "embedding_near_dup_pairs", oracle=lambda: _duck_near_dup_emb_sql(0.3)
+)
 def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs blocked by label (cos >= 0.3)."""
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1570,7 +1576,7 @@ _DEBOUNCE_ID = "cast(event_id as string)"
 
 @register(
     "debounce_dedup_events",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH seq AS (
         SELECT event_id, event_type, ts,
                lag(ts) OVER (
@@ -2203,7 +2209,7 @@ def _duck_simhash_near_dup(max_hamming: int = 3) -> str:
     """
 
 
-@register("simhash_near_dup_pairs", oracle=_duck_simhash_near_dup())
+@register("simhash_near_dup_pairs", oracle=_duck_simhash_near_dup)
 def simhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash Hamming<=3 near-dup pairs via lossless nibble banding
     (the oracle does the full quadratic scan; the Spark plan never
@@ -2292,7 +2298,7 @@ def _duck_dedup_clusters(threshold: float = 0.5) -> str:
     """
 
 
-@register("dedup_clusters_minhash", oracle=_duck_dedup_clusters())
+@register("dedup_clusters_minhash", oracle=_duck_dedup_clusters)
 def dedup_clusters_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTER resolution: MinHash+LSH pairs -> connected
     components (iterative min-label propagation, lineage-checkpointed
@@ -2369,7 +2375,7 @@ def _duck_clean_corpus(
     """
 
 
-@register("clean_corpus", oracle=_duck_clean_corpus())
+@register("clean_corpus", oracle=_duck_clean_corpus)
 def clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end training-data prep: quality floor (>=0.5) -> lang
     allowlist (en, de) -> exact dedup -> near-dup canonicalization.
@@ -2444,7 +2450,7 @@ def _duck_ivf_topk_sql(k: int = 5, n_probe: int = 2, n_queries: int = 10) -> str
     """
 
 
-@register("embedding_ann_ivf_topk", oracle=_duck_ivf_topk_sql())
+@register("embedding_ann_ivf_topk", oracle=_duck_ivf_topk_sql)
 def embedding_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN: coarse quantizer (16 cells, 2 probed) + exact cosine
     within probed cells, using the PINNED pretrained quantizer
@@ -2543,7 +2549,7 @@ def _duck_pq_topk_sql(k: int = 5, n_queries: int = 10) -> str:
     """
 
 
-@register("embedding_pq_topk", oracle=_duck_pq_topk_sql())
+@register("embedding_pq_topk", oracle=_duck_pq_topk_sql)
 def embedding_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN (`operators/similarity.py::pq_topk`):
     candidates encoded to eight 4-bit codes by the PINNED codebooks
@@ -2595,7 +2601,7 @@ def _duck_pq_rerank_sql(
     """
 
 
-@register("embedding_pq_rerank_topk", oracle=_duck_pq_rerank_sql())
+@register("embedding_pq_rerank_topk", oracle=_duck_pq_rerank_sql)
 def embedding_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage retrieval (`operators/similarity.py::pq_rerank_topk`):
     ADC over 4-bit codes shortlists 20 candidates per query, exact
@@ -2714,7 +2720,7 @@ def _duck_ivfpq_topk_sql(
     """
 
 
-@register("embedding_ann_ivfpq_topk", oracle=_duck_ivfpq_topk_sql())
+@register("embedding_ann_ivfpq_topk", oracle=_duck_ivfpq_topk_sql)
 def embedding_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ ANN (`operators/similarity.py::ann_topk_ivfpq`): the
     pinned coarse quantizer prunes WHICH candidates each query scores
@@ -2798,7 +2804,7 @@ def _duck_drift_psi_sql(smoothing: float = 0.5) -> str:
     """
 
 
-@register("embedding_drift_psi_by_cell", oracle=_duck_drift_psi_sql())
+@register("embedding_drift_psi_by_cell", oracle=_duck_drift_psi_sql)
 def embedding_drift_psi_by_cell(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-distribution drift monitor (`operators/similarity.py::
     cell_population_drift`): per-quantizer-cell Population Stability
@@ -2838,7 +2844,7 @@ def _duck_drift_advisory_sql() -> str:
     """
 
 
-@register("quantizer_drift_advisory", oracle=_duck_drift_advisory_sql())
+@register("quantizer_drift_advisory", oracle=_duck_drift_advisory_sql)
 def quantizer_drift_advisory(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pinned-artifact LIFECYCLE check (`operators/similarity.py::
     drift_refit_advisory`): the per-cell PSI drift report upgraded to
@@ -2981,7 +2987,7 @@ def _duck_ivfpq_residual_sql(
 
 
 @register(
-    "embedding_ann_ivfpq_residual_topk", oracle=_duck_ivfpq_residual_sql()
+    "embedding_ann_ivfpq_residual_topk", oracle=_duck_ivfpq_residual_sql
 )
 def embedding_ann_ivfpq_residual_topk(
     spark: SparkSession, sf_dir: str
@@ -3041,7 +3047,7 @@ def _duck_ivfpq_rerank_sql(
 
 
 @register(
-    "embedding_ann_ivfpq_rerank_topk", oracle=_duck_ivfpq_rerank_sql()
+    "embedding_ann_ivfpq_rerank_topk", oracle=_duck_ivfpq_rerank_sql
 )
 def embedding_ann_ivfpq_rerank_topk(
     spark: SparkSession, sf_dir: str
@@ -3134,7 +3140,7 @@ def _duck_kmeans_refine_sql() -> str:
     """
 
 
-@register("kmeans_refine_cluster_stats", oracle=_duck_kmeans_refine_sql())
+@register("kmeans_refine_cluster_stats", oracle=_duck_kmeans_refine_sql)
 def kmeans_refine_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed k-means: ONE full-corpus Lloyd refinement of the
     pinned coarse quantizer (functions/ivf_centroids.py) with
@@ -3417,7 +3423,7 @@ def _duck_repetition() -> str:
     )
 
 
-@register("repetition_quality_stats", oracle=_duck_repetition())
+@register("repetition_quality_stats", oracle=_duck_repetition)
 def repetition_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition signals (duplicate-token / duplicate-
     bigram fractions) — boilerplate and machine-generated text
@@ -3436,7 +3442,7 @@ def _duck_pii() -> str:
     )
 
 
-@register("pii_redaction_stats", oracle=_duck_pii())
+@register("pii_redaction_stats", oracle=_duck_pii)
 def pii_redaction_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII detection + redaction digest (email/IPv4/phone patterns,
     dialect-portable regexes). The synthetic corpus is PII-free, so
@@ -3457,7 +3463,7 @@ def _duck_split() -> str:
     )
 
 
-@register("train_val_test_split", oracle=_duck_split())
+@register("train_val_test_split", oracle=_duck_split)
 def train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 80/10/10 split by salted id hash — stateless (no
     shuffle, no sampling state), stable under corpus growth."""
@@ -3467,7 +3473,7 @@ def train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "token_vocab_top50",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH t AS (
         SELECT doc_id, unnest({dual.tokens('text', 'duck')}) AS token
         FROM documents
@@ -3518,7 +3524,7 @@ def _duck_zorder_locality() -> str:
     """
 
 
-@register("zorder_bucket_locality", oracle=_duck_zorder_locality())
+@register("zorder_bucket_locality", oracle=_duck_zorder_locality)
 def zorder_bucket_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order layout locality audit (`operators/layout.py`): orders
     mapped onto the Morton curve of (customer bucket, order
@@ -3618,7 +3624,7 @@ def _duck_quality_buckets(n_buckets: int = 5) -> str:
     """
 
 
-@register("curriculum_quality_buckets", oracle=_duck_quality_buckets())
+@register("curriculum_quality_buckets", oracle=_duck_quality_buckets)
 def curriculum_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Curriculum stratification (`operators/curation.py::
     quality_bucket_stats`): documents bucketed into 5 quality tiers by
@@ -3631,7 +3637,7 @@ def curriculum_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cur.quality_bucket_stats(load_table(spark, sf_dir, "documents"))
 
 
-@register("unigram_logprob_quality", oracle=_duck_unigram_logprob(0.5))
+@register("unigram_logprob_quality", oracle=lambda: _duck_unigram_logprob(0.5))
 def unigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram-LM pseudo-perplexity quality signal: mean smoothed token
     log-probability per document, model trained on the corpus itself
@@ -3641,7 +3647,7 @@ def unigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tfidf_top_terms_per_lang",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH t AS (
         SELECT lang, doc_id, unnest({dual.tokens('text', 'duck')}) AS token
         FROM documents
@@ -3717,7 +3723,7 @@ def _duck_decontaminate(threshold: float) -> str:
     """
 
 
-@register("benchmark_contamination", oracle=_duck_contamination(0.2))
+@register("benchmark_contamination", oracle=lambda: _duck_contamination(0.2))
 def benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Eval-set contamination scan: corpus docs whose shingle sets are
     >= 20% contained in a benchmark doc (benchmark = doc_id % 97 == 0
@@ -3729,7 +3735,7 @@ def benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cur.contamination_check(corpus, bench, threshold=0.2)
 
 
-@register("decontaminate_corpus", oracle=_duck_decontaminate(0.2))
+@register("decontaminate_corpus", oracle=lambda: _duck_decontaminate(0.2))
 def decontaminate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Eval-set DECONTAMINATION (`operators/curation.py::
     decontaminate`) — the removal half of `benchmark_contamination`
@@ -3761,7 +3767,7 @@ def _duck_mix() -> str:
     )
 
 
-@register("corpus_mix_sample", oracle=_duck_mix())
+@register("corpus_mix_sample", oracle=_duck_mix)
 def corpus_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted corpus mixing: deterministic hash sampling at 25% for
     src0, 50% for src1, 100% elsewhere — reproducible across runs and
@@ -3795,7 +3801,9 @@ def _duck_semantic_dedup(threshold: float) -> str:
     """
 
 
-@register("semantic_dedup_embeddings", oracle=_duck_semantic_dedup(0.3))
+@register(
+    "semantic_dedup_embeddings", oracle=lambda: _duck_semantic_dedup(0.3)
+)
 def semantic_dedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic dedup: label-blocked cosine pairs ->
     connected components -> canonical survivor per semantic cluster.
@@ -3806,7 +3814,7 @@ def semantic_dedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "per_source_corpus_stats",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH t AS (
         SELECT doc_id, source, lang,
                len({dual.tokens('text', 'duck')}) AS n
@@ -3867,7 +3875,7 @@ def _duck_segment_dedup() -> str:
     """
 
 
-@register("segment_dedup_docs", oracle=_duck_segment_dedup())
+@register("segment_dedup_docs", oracle=_duck_segment_dedup)
 def segment_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4-style global segment dedup: only the corpus's first
     occurrence of each 8-token segment survives; documents are rebuilt
@@ -3922,7 +3930,7 @@ def _duck_padding_waste() -> str:
     """
 
 
-@register("padding_waste_by_length_bucket", oracle=_duck_padding_waste())
+@register("padding_waste_by_length_bucket", oracle=_duck_padding_waste)
 def padding_waste_by_length_bucket(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -3955,7 +3963,7 @@ def _duck_epoch_shuffle(epoch: int = 1, n_shards: int = 8) -> str:
     """
 
 
-@register("epoch_shuffle_order", oracle=_duck_epoch_shuffle())
+@register("epoch_shuffle_order", oracle=_duck_epoch_shuffle)
 def epoch_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic per-epoch training order
     (`operators/layout.py::epoch_shuffle`): every document's
@@ -3974,7 +3982,7 @@ def epoch_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("pack_token_shards", oracle=_duck_pack_shards(2000))
+@register("pack_token_shards", oracle=lambda: _duck_pack_shards(2000))
 def pack_token_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-output shard layout: documents packed into ~2000-token
     shards in deterministic (split, doc_id) order. The running sum is
@@ -4019,7 +4027,7 @@ def _duck_prepare_shards(budget: int = 2000) -> str:
     """
 
 
-@register("prepare_training_shards", oracle=_duck_prepare_shards())
+@register("prepare_training_shards", oracle=_duck_prepare_shards)
 def prepare_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE end-to-end training-data pipeline in one plan: quality
     floor -> language allowlist -> exact dedup -> near-dup
@@ -4333,7 +4341,7 @@ def _duck_domain_cap() -> str:
     """
 
 
-@register("domain_cap_per_source", oracle=_duck_domain_cap())
+@register("domain_cap_per_source", oracle=_duck_domain_cap)
 def domain_cap_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Over-represented-domain throttle: at most 10 docs per source,
     picked by stable id-hash. row_number<=k is the WindowGroupLimit
@@ -4367,7 +4375,7 @@ def _duck_chunk_docs() -> str:
     """
 
 
-@register("chunk_documents_overlap", oracle=_duck_chunk_docs())
+@register("chunk_documents_overlap", oracle=_duck_chunk_docs)
 def chunk_documents_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-sequence construction: 32-token chunks every 24 tokens
     (8-token overlap), last chunk runs short. Pure per-row explode —
@@ -4403,7 +4411,7 @@ def _duck_incremental_dedup() -> str:
     """
 
 
-@register("incremental_dedup_new_docs", oracle=_duck_incremental_dedup())
+@register("incremental_dedup_new_docs", oracle=_duck_incremental_dedup)
 def incremental_dedup_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental ingest dedup: the second half of the corpus (the
     'new batch') exact-deduped within itself and against the first
@@ -4470,7 +4478,7 @@ _FUZZ_DIST = 2
 
 @register(
     "fuzzy_name_pairs_part",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH c AS (
         SELECT p_name AS name, min(p_partkey) AS rep_id,
                count(*) AS n,
@@ -4602,7 +4610,7 @@ def _duck_weighted_sample(k: int) -> str:
     """
 
 
-@register("weighted_sample_per_lang", oracle=_duck_weighted_sample(5))
+@register("weighted_sample_per_lang", oracle=lambda: _duck_weighted_sample(5))
 def weighted_sample_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length-weighted exact-count sample: 5 docs per language via
     deterministic Efraimidis-Spirakis order sampling (ln(u)/w key from
@@ -5128,7 +5136,7 @@ def _duck_bm25_sql() -> str:
     """
 
 
-@register("keyword_search_bm25", oracle=_duck_bm25_sql())
+@register("keyword_search_bm25", oracle=_duck_bm25_sql)
 def keyword_search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 documents for a fixed keyword query under Okapi BM25
     (k1=1.2, b=0.75) — the classic lexical-retrieval scorer.
@@ -5215,7 +5223,7 @@ def _duck_substring_scrub_sql(w: int = _SCRUB_W) -> str:
     """
 
 
-@register("substring_scrub_docs", oracle=_duck_substring_scrub_sql())
+@register("substring_scrub_docs", oracle=_duck_substring_scrub_sql)
 def substring_scrub_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cross-document substring SCRUB (Lee et al.'s
     exact-substring dedup, the removal half): every token covered by
@@ -5265,7 +5273,7 @@ def _duck_dup_ngram_sql() -> str:
     """
 
 
-@register("dup_ngram_fraction", oracle=_duck_dup_ngram_sql())
+@register("dup_ngram_fraction", oracle=_duck_dup_ngram_sql)
 def dup_ngram_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document duplicate-trigram fraction: the share of a doc's
     distinct word trigrams that occur in at least one OTHER document —
@@ -5534,7 +5542,7 @@ def _pagerank_sql(
     return "\n".join(lines)
 
 
-@register("pagerank_part_supplier", oracle=_pagerank_sql(dual.DUCK))
+@register("pagerank_part_supplier", oracle=lambda: _pagerank_sql(dual.DUCK))
 def pagerank_part_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-25 PageRank over the undirected part<->supplier bipartite
     graph derived from lineitem (3 iterations, damping 0.85) — the
@@ -6214,7 +6222,7 @@ def _bom_rollup_sql(dialect: str, table: str = "part") -> str:
     """
 
 
-@register("bom_rollup_recursive", oracle=_bom_rollup_sql(dual.DUCK))
+@register("bom_rollup_recursive", oracle=lambda: _bom_rollup_sql(dual.DUCK))
 def bom_rollup_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical (bill-of-materials-style) rollup via Spark 4's
     RECURSIVE CTE: every part climbs its deterministic assembly tree
@@ -6468,7 +6476,7 @@ def _zlib_oracle_sql() -> str:
     """
 
 
-@register("compression_ratio_quality", oracle=_zlib_oracle_sql())
+@register("compression_ratio_quality", oracle=_zlib_oracle_sql)
 def compression_ratio_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document zlib compression ratio (`text.compression_ratio`)
     — the repetition/boilerplate quality signal, and the catalog's
@@ -6554,7 +6562,7 @@ def _duck_incremental_near_dup(threshold: float) -> str:
 
 @register(
     "incremental_near_dup_new_docs",
-    oracle=_duck_incremental_near_dup(0.5),
+    oracle=lambda: _duck_incremental_near_dup(0.5),
 )
 def incremental_near_dup_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental NEAR-dup ingest (`dedup.incremental_near_dup`):
@@ -6591,7 +6599,8 @@ _DOC_ROW = (
 # as float64 while Spark returns int64 — the driver's hash is dtype
 # sensitive, so every integer SUM must be CAST back to BIGINT (r6
 # driver-red root cause; see tools/oracle_check.py --strict).
-_DUCK_DOC_CHECKSUM = f"""
+def _duck_doc_checksum() -> str:
+    return f"""
     SELECT source, count(*) AS n_docs,
            CAST(sum(n_chars) AS BIGINT) AS sum_chars,
            CAST(sum({dual.md5_int(_DOC_ROW, dual.DUCK)}) AS BIGINT)
@@ -6669,7 +6678,7 @@ def _roundtrip_docs(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame:
     return _docs_checksum(back)
 
 
-@register("orc_roundtrip_docs", oracle=_DUCK_DOC_CHECKSUM)
+@register("orc_roundtrip_docs", oracle=_duck_doc_checksum)
 def orc_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC write -> read fidelity (`sources/readers.py::read_orc` /
     `write_format`): documents written as ORC, re-read, reduced to a
@@ -6684,7 +6693,7 @@ def orc_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _roundtrip_docs(spark, sf_dir, "orc")
 
 
-@register("xml_roundtrip_docs", oracle=_DUCK_DOC_CHECKSUM)
+@register("xml_roundtrip_docs", oracle=_duck_doc_checksum)
 def xml_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XML write -> read fidelity (`sources/readers.py::read_xml`,
     Spark 4's built-in ``xml`` source, schema-first): documents
@@ -6705,7 +6714,7 @@ def xml_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _roundtrip_docs(spark, sf_dir, "xml")
 
 
-@register("jsonl_roundtrip_docs", oracle=_DUCK_DOC_CHECKSUM)
+@register("jsonl_roundtrip_docs", oracle=_duck_doc_checksum)
 def jsonl_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines write -> read fidelity (`read_jsonl`, schema-first
     — the S1 explicit-schema discipline applied to JSON; inference
@@ -6722,7 +6731,7 @@ _EVT_ROW = (
 
 @register(
     "csv_roundtrip_events_props",
-    oracle=f"""
+    oracle=lambda: f"""
     SELECT event_type, count(*) AS n_events,
            round(sum(value), 2) AS sum_value,
            CAST(sum({dual.md5_int(_EVT_ROW, dual.DUCK)}) AS BIGINT)
@@ -6790,7 +6799,7 @@ def _duck_chunk_boundaries(ctx: int = 512) -> str:
 
 
 @register(
-    "context_chunk_boundary_stats", oracle=_duck_chunk_boundaries(512)
+    "context_chunk_boundary_stats", oracle=lambda: _duck_chunk_boundaries(512)
 )
 def context_chunk_boundary_stats(
     spark: SparkSession, sf_dir: str
@@ -6829,7 +6838,7 @@ from hadoop_data_pipeline_spark.operators import learn  # noqa: E402
 
 @register(
     "quality_perceptron_weights",
-    oracle=learn.perceptron_oracle_sql(D, output="weights"),
+    oracle=lambda: learn.perceptron_oracle_sql(D, output="weights"),
 )
 def quality_perceptron_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed training of a learned quality filter
@@ -6853,7 +6862,7 @@ def quality_perceptron_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "quality_perceptron_doc_scores",
-    oracle=learn.perceptron_oracle_sql(D, output="scores"),
+    oracle=lambda: learn.perceptron_oracle_sql(D, output="scores"),
 )
 def quality_perceptron_doc_scores(
     spark: SparkSession, sf_dir: str
@@ -6904,7 +6913,7 @@ def _duck_top_bigram() -> str:
     """
 
 
-@register("top_bigram_char_fraction", oracle=_duck_top_bigram())
+@register("top_bigram_char_fraction", oracle=_duck_top_bigram)
 def top_bigram_char_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher §A1.1 repetition signal
     (`operators/text.py::top_bigram_char_fraction`): per document the
@@ -6966,7 +6975,7 @@ def _duck_assoc_rules(min_support: int = 2) -> str:
     """
 
 
-@register("association_rules_copurchase", oracle=_duck_assoc_rules())
+@register("association_rules_copurchase", oracle=_duck_assoc_rules)
 def association_rules_copurchase(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -7041,7 +7050,7 @@ def _duck_triangles(min_qty: int = _TRI_MIN_QTY) -> str:
     """
 
 
-@register("copurchase_triangle_counts", oracle=_duck_triangles())
+@register("copurchase_triangle_counts", oracle=_duck_triangles)
 def copurchase_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-part triangle participation in the bulk co-purchase graph
     (`operators/analytics.py::triangle_participation`): nodes are
@@ -7134,7 +7143,7 @@ def _duck_cms(k: int = 20, depth: int = 4, width: int = 256) -> str:
     """
 
 
-@register("cms_heavy_hitter_counts", oracle=_duck_cms())
+@register("cms_heavy_hitter_counts", oracle=_duck_cms)
 def cms_heavy_hitter_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch heavy-hitter estimates
     (`operators/analytics.py::cms_heavy_hitters`): the 4 x 256
@@ -7193,7 +7202,7 @@ def _image_lens_cte(cols: str, select: str) -> str:
 
 @register(
     "image_decode_stats",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH {_image_lens_cte("s, ss", "{s}, {ss}")}
     SELECT d.doc_id, 32 AS width, 32 AS height,
            'RGB' AS mode, 'PPM' AS format,
@@ -7221,7 +7230,7 @@ def image_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "image_resize_digest",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH {_image_lens_cte("rz", "{rz}")}
     SELECT d.doc_id, 16 AS width, 16 AS height, i.rz AS rz_md5
     FROM documents d JOIN imap i ON md5(d.text) = i.h
@@ -7250,7 +7259,7 @@ def image_resize_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "image_dhash_signatures",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH {_image_lens_cte("dh", "{dh}")}
     SELECT d.doc_id, i.dh AS dhash
     FROM documents d JOIN imap i ON md5(d.text) = i.h
@@ -7270,7 +7279,7 @@ def image_dhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "image_near_dup_phash",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH {_image_lens_cte("dh", "{dh}")},
     sig AS (
         SELECT d.doc_id, i.dh FROM documents d JOIN imap i ON md5(d.text) = i.h
@@ -7315,7 +7324,7 @@ def _audio_lens_cte(cols: str, select: str) -> str:
 
 @register(
     "audio_decode_stats",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH {_audio_lens_cte("s, ss", "{s}, {ss}")}
     SELECT d.doc_id, {_AUD_N} AS n_samples, 8000 AS rate,
            CAST({_AUD_DUR_US} AS BIGINT) AS duration_us,
@@ -7347,7 +7356,7 @@ def audio_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "audio_fingerprint_near_dup",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH {_audio_lens_cte("fp", "{fp}")},
     sig AS (
         SELECT d.doc_id, i.fp FROM documents d JOIN amap i ON md5(d.text) = i.h
@@ -7412,7 +7421,7 @@ def _video_lens_cte(cols: str, select: str, materialized: bool = False) -> str:
 
 @register(
     "video_decode_stats",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH {_video_lens_cte("s, ss", "{s}, {ss}")}
     SELECT d.doc_id, 4 AS n_frames, 32 AS width, 32 AS height,
            CAST(40000 AS BIGINT) AS us_per_frame,
@@ -7444,7 +7453,7 @@ def video_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "video_frame_dhash_signatures",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH {_video_lens_cte("d0, d1, d2, d3", "{d0}, {d1}, {d2}, {d3}")}
     SELECT d.doc_id,
            unnest([0, 1, 2, 3]) AS frame_idx,
@@ -7488,7 +7497,7 @@ def _duck_video_scene() -> str:
     """
 
 
-@register("video_scene_near_dup", oracle=_duck_video_scene())
+@register("video_scene_near_dup", oracle=_duck_video_scene)
 def video_scene_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared-scene video near-duplicates: pairs of videos with >= 3
     of 4 frame indices whose per-frame dHashes differ in <= 2 bits —
@@ -7512,7 +7521,7 @@ def video_scene_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "audio_decimate_digest",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH {_audio_lens_cte("dm", "{dm}")}
     SELECT d.doc_id, CAST({_AUD_N // 4} AS BIGINT) AS n_samples,
            2000 AS rate, i.dm AS dec_md5
@@ -7543,7 +7552,7 @@ def audio_decimate_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "video_decimate_digest",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH {_video_lens_cte("dm", "{dm}")}
     SELECT d.doc_id, 2 AS n_frames,
            CAST(80000 AS BIGINT) AS us_per_frame, i.dm AS dec_md5
@@ -7597,7 +7606,7 @@ def _duck_incremental_video_probe() -> str:
 
 @register(
     "incremental_video_scene_probe",
-    oracle=_duck_incremental_video_probe(),
+    oracle=_duck_incremental_video_probe,
 )
 def incremental_video_scene_probe(
     spark: SparkSession, sf_dir: str
@@ -7633,7 +7642,7 @@ def incremental_video_scene_probe(
 
 @register(
     "incremental_image_probe",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH {_image_lens_cte("dh", "{dh}")},
     sig AS (
         SELECT d.doc_id, i.dh FROM documents d JOIN imap i ON md5(d.text) = i.h
@@ -7666,7 +7675,7 @@ def incremental_image_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "incremental_audio_probe",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH {_audio_lens_cte("fp", "{fp}")},
     sig AS (
         SELECT d.doc_id, i.fp FROM documents d JOIN amap i ON md5(d.text) = i.h
@@ -7734,7 +7743,7 @@ def _order_day_idx() -> F.Column:
 
 @register(
     "range_active_orders_daily",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH iv AS (
         SELECT {_DUCK_ORDER_DAY} AS s, o_totalprice FROM orders
     ),
@@ -7777,7 +7786,7 @@ def range_active_orders_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "range_overlap_order_pairs",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH iv AS (
         SELECT o_custkey, o_orderkey, {_DUCK_ORDER_DAY} AS s FROM orders
     )
@@ -7828,7 +7837,7 @@ def range_overlap_order_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "range_peak_concurrent_orders",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH iv AS (
         SELECT o_orderpriority, {_DUCK_ORDER_DAY} AS s FROM orders
     ),
@@ -8007,10 +8016,26 @@ def _apply_driver_window() -> None:
     if missing:
         raise RuntimeError(f"driver-window queries not registered: {missing}")
     order = _DRIVER_WINDOW + [n for n in QUERIES if n not in window]
-    for mapping in (QUERIES, ORACLES):
+    for mapping in (QUERIES, _ORACLE_SOURCES):
         ordered = {n: mapping[n] for n in order if n in mapping}
         mapping.clear()
         mapping.update(ordered)
 
 
 _apply_driver_window()
+
+
+def __getattr__(name: str):
+    """Build ``ORACLES`` (name -> DuckDB SQL, driver-window order) on
+    first access and bind it as a plain module attribute, so every
+    later read is an ordinary dict lookup (PEP 562). Two threads that
+    race here each build the same complete dict; the last one bound
+    stays."""
+    if name != "ORACLES":
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    oracles = {
+        n: src if isinstance(src, str) else src()
+        for n, src in _ORACLE_SOURCES.items()
+    }
+    globals()["ORACLES"] = oracles
+    return oracles

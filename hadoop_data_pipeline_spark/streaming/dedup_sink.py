@@ -115,7 +115,8 @@ def stage_and_release(
 
     spark = df.sparkSession
     df.write.mode("overwrite").parquet(staging_dir)
-    staged = spark.read.parquet(staging_dir)
+    # Reading with the written schema skips the schema-inference job.
+    staged = spark.read.schema(df.schema).parquet(staging_dir)
 
     def release() -> None:
         shutil.rmtree(staging_dir, ignore_errors=True)

@@ -38,10 +38,11 @@ from hadoop_data_pipeline_spark.fs import FS
 KEEP_VERSIONS = 5  # reference retention default (versioning.py:35)
 
 
-def content_checksum(df: DataFrame) -> str:
-    """Order-insensitive distributed content hash: per-row md5 over the
-    concatenated values (null-tagged), truncated to 28 bits, summed.
-    One aggregate job; no data to the driver beyond a single number."""
+def _count_and_checksum(df: DataFrame) -> tuple[int, str]:
+    """Row count and order-insensitive distributed content hash of
+    ``df`` in one aggregate job: per-row md5 over the concatenated
+    values (null-tagged), truncated to 28 bits, summed. No data to the
+    driver beyond two numbers."""
     # Each column is coalesced onto an explicit NULL sentinel BEFORE
     # concat_ws (which silently skips NULLs): rows differing only in
     # WHICH column is null, e.g. ('a', NULL, 'b') vs ('a', 'b', NULL),
@@ -56,8 +57,15 @@ def content_checksum(df: DataFrame) -> str:
         16,
         10,
     ).cast("bigint")
-    total = df.select(F.sum(row_hash).alias("s")).collect()[0]["s"]
-    return format(int(total or 0), "x")
+    row = df.select(
+        F.count(F.lit(1)).alias("n"), F.sum(row_hash).alias("s")
+    ).collect()[0]
+    return row["n"], format(int(row["s"] or 0), "x")
+
+
+def content_checksum(df: DataFrame) -> str:
+    """The content hash of ``_count_and_checksum``."""
+    return _count_and_checksum(df)[1]
 
 
 class Versioner:
@@ -85,13 +93,14 @@ class Versioner:
         vid = version_id or ts.strftime("v_%Y%m%d_%H%M%S")
         vdir = self._version_dir(year, vid)
         df.write.mode("overwrite").parquet(vdir)
+        row_count, checksum = _count_and_checksum(df)
         manifest: dict[str, Any] = {
             "version": vid,
             "source_file": source_file.rsplit("/", 1)[-1],
             "year": year,
             "timestamp": ts.isoformat(),
-            "row_count": df.count(),
-            "checksum": content_checksum(df),
+            "row_count": row_count,
+            "checksum": checksum,
             "columns": df.columns,
             "keep_versions": self.keep,
         }

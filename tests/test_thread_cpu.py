@@ -4,15 +4,12 @@ run of a CPU-bound Python command."""
 from __future__ import annotations
 
 import json
-import subprocess
 import sys
-from pathlib import Path
 
 import pytest
 
+from tools import thread_cpu
 from tools.thread_cpu import normalize, summarize
-
-TOOL = Path(__file__).resolve().parent.parent / "tools" / "thread_cpu.py"
 
 
 @pytest.mark.parametrize(
@@ -55,17 +52,15 @@ def test_summarize_folds_threads_and_keeps_the_remainder():
     assert summarize(seen, 1.0)["total"] == 3.5
 
 
-def test_sampled_run_attributes_the_python_driver():
+def test_sampled_run_attributes_the_python_driver(monkeypatch, capsys):
     busy = (
         "import time\n"
         "t = time.process_time()\n"
         "while time.process_time() - t < 0.6: pass"
     )
-    cmd = [sys.executable, "-c", busy]
-    out = subprocess.run(
-        [sys.executable, str(TOOL), "--interval", "0.05", *cmd],
-        capture_output=True, text=True, check=True, timeout=120,
-    )
-    table = json.loads(out.stdout.strip().splitlines()[-1])
+    # sample often enough to see a 0.6 s command
+    monkeypatch.setattr(thread_cpu, "_INTERVAL", 0.05)
+    assert thread_cpu.main([sys.executable, "-c", busy]) == 0
+    table = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert table["Python driver"] >= 0.4
     assert table["total"] >= table["Python driver"]

@@ -1,11 +1,11 @@
 """CPU seconds per thread kind of a command's process tree.
 
 Usage:
-    python tools/thread_cpu.py [--interval S] CMD [ARG ...]
+    python tools/thread_cpu.py CMD [ARG ...]
 
-Runs ``CMD`` and, every ``--interval`` seconds (default 0.5) until it
-exits, reads ``/proc/<pid>/task/<tid>/stat`` of every process in its
-tree (read only). Each thread's CPU (user + system) is attributed to a
+Runs ``CMD`` and, every half second until it exits, reads
+``/proc/<pid>/task/<tid>/stat`` of every process in its tree (read
+only). Each thread's CPU (user + system) is attributed to a
 normalized name:
 
 * JVM threads by their thread name with pool numbers folded: the C2 and
@@ -37,6 +37,7 @@ import sys
 import time
 
 _TICK = os.sysconf("SC_CLK_TCK")
+_INTERVAL = 0.5  # seconds between two samples
 
 # Linux keeps the first 15 bytes of a thread name, so JVM names arrive
 # truncated ("C2 CompilerThre", "Executor task l").
@@ -144,7 +145,6 @@ def summarize(seen: dict, total_s: float) -> dict[str, float]:
 
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--interval", type=float, default=0.5)
     ap.add_argument("cmd", nargs=argparse.REMAINDER)
     args = ap.parse_args(argv)
     if not args.cmd:
@@ -155,7 +155,7 @@ def main(argv: list[str] | None = None) -> int:
     seen: dict = {}
     while proc.poll() is None:
         sample(proc.pid, seen)
-        time.sleep(args.interval)
+        time.sleep(_INTERVAL)
     after = resource.getrusage(resource.RUSAGE_CHILDREN)
     total = (after.ru_utime - before.ru_utime) + (
         after.ru_stime - before.ru_stime
